@@ -21,8 +21,10 @@ Master/executor topology comes from spark-submit, like the extraction
 job; the same invocation runs at N and 4N executors.  The write order is
 transactional in the same sense as the extraction pipeline: the kept
 corpus lands first and the decision table (the thing downstream reads to
-trust a run) lands LAST, so a crashed run leaves no authoritative
-decision table and a rerun simply overwrites.
+trust a run) lands LAST.  Each output is built in a temp sibling and
+renamed into place (``pipeline/snapshot_cache.publish_dir``), so a
+crashed run leaves the previous run's tables whole and a rerun replaces
+them.
 
 Prints ONE JSON line: rows, kept, kept_pct, wall_sec.
 """
@@ -71,93 +73,71 @@ def main(argv=None) -> int:
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())
 
-    from ragflow_core16_spark.operators.dedup import materialize_dedup_index
-    from ragflow_core16_spark.operators.webclean import (
-        web_decisions_path, web_decisions_unordered)
+    from ragflow_core16_spark.pipeline.snapshot_cache import (
+        materialize, publish_dir)
 
     t0 = time.time()
+    inp = args.input.rstrip("/")
     if args.incremental:
         # day-2 path: merge the batch into the base snapshot's dedup
         # index / decision table / retrieval postings without rescanning
         # day-1 documents (pipeline/incremental.py); the merged tables
         # land under the combined corpus fingerprint, so every routed
         # query over --input serves them immediately
-        from pyspark.sql import functions as F
-
         from ragflow_core16_spark.pipeline.incremental import (
             incremental_update)
         paths = incremental_update(spark, args.base.rstrip("/"),
-                                   args.batch.rstrip("/"),
-                                   args.input.rstrip("/"),
+                                   args.batch.rstrip("/"), inp,
                                    allow_recrawl=args.allow_recrawl)
-        dec = spark.read.parquet(paths["web_decisions"])
-        if not args.no_corpus:
-            docs = spark.read.parquet(
-                f"{args.input.rstrip('/')}/documents.parquet")
-            kept = docs.join(dec.filter(F.col("corpus_keep"))
-                             .select("doc_id"), "doc_id")
-            kept.write.mode("overwrite").parquet(f"{args.output}/corpus")
-        dec.write.mode("overwrite").parquet(f"{args.output}/keep")
-        rows = dec.count()
-        kept_n = dec.filter(F.col("corpus_keep")).count()
-        print(json.dumps({
-            "run_id": args.run_id, "mode": "incremental",
-            "rows": rows, "kept": kept_n,
-            "kept_pct": round(100.0 * kept_n / rows, 2) if rows else 0.0,
-            "tables": sorted(paths),
-            "wall_sec": round(time.time() - t0, 2)}))
-        spark.stop()
-        return 0
-    # dedup index first (signatures / verified pairs / cluster labels /
-    # simhash fingerprints): the decision table's dedup_kept column then
-    # scans the just-written labels, and later pair/cluster queries are
-    # scans too — at 100 TB the signature+CC jobs run once per snapshot,
-    # never per query
-    materialize_dedup_index(spark, args.input.rstrip("/"))
-    # the site-frequency boilerplate lexicon is a curation-side corpus
-    # statistic (fit once, strip against the frozen table)
-    from ragflow_core16_spark.operators.webclean import (
-        materialize_site_boilerplate)
-    materialize_site_boilerplate(spark, args.input.rstrip("/"))
-    # the decontamination index (bench gram set + train-gram posting):
-    # the state a later --incremental run needs to re-check day-1 docs
-    # against a grown benchmark set without re-gramming day-1 text
-    from ragflow_core16_spark.operators.training import (
-        materialize_decon_index)
-    materialize_decon_index(spark, args.input.rstrip("/"))
-    # persist: the decision DAG (Gopher aggs, C4 lines, decontamination
-    # gram join, dedup survivors, robots/blocklist/meta-robots gates)
-    # feeds the actions below — without this the corpus write and the
-    # keep write each recompute it end-to-end.  The table carries EVERY
-    # per-component column (gopher_pass, c4_pass, dedup_kept, clean,
-    # corpus_keep, allowed, blocked, indexable, web_keep), so downstream
-    # web_keep/corpus_keep queries are pure scans of it.
-    decisions = web_decisions_unordered(
-        spark, args.input.rstrip("/")).persist()
+        extra = {"mode": "incremental", "tables": sorted(paths)}
+    else:
+        from ragflow_core16_spark.operators.dedup import (
+            materialize_dedup_index)
+        from ragflow_core16_spark.operators.training import (
+            materialize_decon_index)
+        from ragflow_core16_spark.operators.webclean import (
+            materialize_site_boilerplate, web_decisions_unordered)
+        # dedup index first (signatures / verified pairs / cluster labels
+        # / simhash fingerprints): the decision table's dedup_kept column
+        # then scans the just-written labels, and later pair/cluster
+        # queries are scans too — at 100 TB the signature+CC jobs run
+        # once per snapshot, never per query
+        materialize_dedup_index(spark, inp)
+        # the site-frequency boilerplate lexicon is a curation-side
+        # corpus statistic (fit once, strip against the frozen table)
+        materialize_site_boilerplate(spark, inp)
+        # the decontamination index (bench gram set + train-gram
+        # posting): the state a later --incremental run needs to
+        # re-check day-1 docs against a grown benchmark set without
+        # re-gramming day-1 text
+        materialize_decon_index(spark, inp)
+        # the decision table carries EVERY per-component column
+        # (gopher_pass, c4_pass, dedup_kept, clean, corpus_keep, allowed,
+        # blocked, indexable, web_keep), so downstream web_keep /
+        # corpus_keep queries are pure scans of it
+        paths = {"web_decisions": materialize(
+            spark, "web_decisions", inp,
+            lambda: web_decisions_unordered(spark, inp))}
+        extra = {}
+    # the snapshot table is published first; the run's own outputs are
+    # read from it, kept corpus then decision table LAST (its presence
+    # certifies a complete run), each swapped in whole
+    dec = spark.read.parquet(paths["web_decisions"])
     if not args.no_corpus:
-        docs = spark.read.parquet(f"{args.input.rstrip('/')}/documents.parquet")
-        kept = (docs.join(decisions.filter(F.col("corpus_keep"))
-                          .select("doc_id"), "doc_id"))
-        kept.write.mode("overwrite").parquet(f"{args.output}/corpus")
-    # publish to the snapshot-fingerprinted cache path FIRST (what the
-    # query operators scan; atomic temp+rename — a concurrent session
-    # scanning the same corpus never sees a half-written table), then the
-    # run's own decision table LAST — its presence certifies a complete run
-    from ragflow_core16_spark.pipeline.snapshot_cache import atomic_write
-    atomic_write(decisions, web_decisions_path(args.input.rstrip("/")))
-    decisions.write.mode("overwrite").parquet(f"{args.output}/keep")
-
-    persisted = spark.read.parquet(f"{args.output}/keep")
-    rows = persisted.count()
-    kept_n = persisted.filter(F.col("corpus_keep")).count()
-    summary = {
-        "run_id": args.run_id,
-        "rows": rows,
-        "kept": kept_n,
+        docs = spark.read.parquet(f"{inp}/documents.parquet")
+        kept = docs.join(dec.filter(F.col("corpus_keep"))
+                         .select("doc_id"), "doc_id")
+        with publish_dir(f"{args.output}/corpus", replace=True) as tmp:
+            kept.write.parquet(tmp)
+    with publish_dir(f"{args.output}/keep", replace=True) as tmp:
+        dec.write.parquet(tmp)
+    rows = dec.count()
+    kept_n = dec.filter(F.col("corpus_keep")).count()
+    print(json.dumps({
+        "run_id": args.run_id, **extra,
+        "rows": rows, "kept": kept_n,
         "kept_pct": round(100.0 * kept_n / rows, 2) if rows else 0.0,
-        "wall_sec": round(time.time() - t0, 2),
-    }
-    print(json.dumps(summary))
+        "wall_sec": round(time.time() - t0, 2)}))
     spark.stop()
     return 0
 

@@ -133,10 +133,3 @@ def laws_docx_sections(paragraphs: list[tuple[str, str]]) -> list[str]:
         sec.insert(0, lines[s][1])
         sections.append("\n".join(sec))
     return [s for s in sections if s]
-
-
-def manual_pdf_chunks(sections: list) -> list[str]:
-    """Model-free PDF route: most-frequent-title pivot merge
-    (manual.py:215-250 ≡ paper.py:186-208)."""
-    from .paper import paper_merge
-    return paper_merge(sections)

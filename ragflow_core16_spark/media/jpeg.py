@@ -100,8 +100,6 @@ def _build_decode(bits, vals):
 
 _DC_ENC = _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
 _AC_ENC = _build_codes(_AC_LUMA_BITS, _AC_LUMA_VALS)
-_DC_DEC = _build_decode(_DC_LUMA_BITS, _DC_LUMA_VALS)
-_AC_DEC = _build_decode(_AC_LUMA_BITS, _AC_LUMA_VALS)
 
 
 def _magnitude(v: int) -> tuple[int, int]:

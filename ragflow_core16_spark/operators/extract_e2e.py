@@ -39,8 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..session import ordered as _ordered
 
 _SEED = 42
-_DELIM = "\n!?。；！？"
-
 # must mirror datagen/pages.py::_EN_WORDS exactly (39 words)
 _EN_WORDS_SQL = ("['the','quick','brown','fox','jumps','over','lazy','dog',"
                  "'data','spark','engine','query','market','report','supply',"

@@ -118,16 +118,6 @@ def rotate_crop(img: np.ndarray, points: np.ndarray) -> np.ndarray:
     return dst
 
 
-def ocr_infer(*_args, **_kw):
-    """Model-inference slot: DBNet/CRNN are external ONNX assets (runtime
-    downloads in the reference, pdf_parser.py:88-93).  Inject a session via
-    the page UDF closure (see ``OnnxSlot``) to enable; absent that, this
-    raises."""
-    raise NotImplementedError(
-        "ONNX OCR models are external assets; plug an onnxruntime session "
-        "factory into the page UDF to enable inference")
-
-
 class OnnxSlot:
     """The executor-side ONNX wiring contract, fully mechanized.
 

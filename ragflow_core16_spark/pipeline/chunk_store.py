@@ -16,18 +16,22 @@ test_chunk_management_within_dataset/`` and exercised by
 
 Store = a parquet directory (the same ``chunks/`` table ``pipeline/run.py``
 writes; Iceberg ``MERGE INTO``/``DELETE FROM`` replace the rewrite in a
-real deployment — the logical ops are identical).  Deletes/updates rewrite
-via LEFT ANTI join — the only scalable shape without a table format.
+real deployment — the logical ops are identical).  Adds append part
+files.  Deletes (and so updates) write the kept rows ONCE, via LEFT ANTI
+join, into a temp sibling that is renamed over the store
+(``snapshot_cache.publish_dir``): a crash or failed rename leaves the
+previous store whole and readable, never a half-rewritten one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..textnorm.rag_tokenizer import fine_grained_tokenize, tokenize
 from ..textnorm.tokens import num_tokens_from_string
 from ..textnorm.xxh64 import xxh64_hexdigest
+from .snapshot_cache import publish_dir
 
 
 def chunk_row(url: str, chunk_text: str, chunk_seq: int = 0,
@@ -89,11 +93,8 @@ def delete_chunks(spark: SparkSession, store: str, chunk_ids: list) -> int:
     if removed == 0:
         return 0
     kept = df.join(F.broadcast(ids), "chunk_id", "left_anti")
-    tmp = store + ".tmp"
-    kept.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(store)
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
+    with publish_dir(store, replace=True) as tmp:
+        kept.write.parquet(tmp)
     return removed
 
 

@@ -68,8 +68,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .snapshot_cache import (corpus_fingerprint, materialize, read_table,
-                             table_path)
+from .snapshot_cache import corpus_fingerprint, materialize, read_table
 
 #: dedup-index kinds the delta path maintains, in dependency order
 DEDUP_KINDS = ("minhash_sigwide", "dedup_pairs", "dedup_labels",
@@ -79,6 +78,12 @@ DEDUP_KINDS = ("minhash_sigwide", "dedup_pairs", "dedup_labels",
 DECON_KINDS = ("decon_bench_grams", "decon_train_grams")
 #: retrieval-index kinds the delta path maintains
 RETRIEVAL_KINDS = ("term_postings", "doc_stats")
+#: every table one delta publishes under the combined fingerprint
+DELTA_KINDS = DEDUP_KINDS + DECON_KINDS + ("web_decisions",) + \
+    RETRIEVAL_KINDS
+
+_COLLAPSE = ("collapse re-crawls to one row per doc_id upstream "
+             "(latest-capture semantics)")
 
 
 def _require_base(spark, kinds, base_dir) -> dict[str, DataFrame]:
@@ -318,19 +323,28 @@ def _recrawl_ids(spark, base_dir: str, batch_dir: str,
                  allow_recrawl: bool) -> DataFrame | None:
     """Batch doc_ids already present in the base snapshot, detected with
     one join against the stored per-doc stats (NO base document scan).
-    Without ``allow_recrawl`` any overlap is an error — merging it
-    blindly would double the doc in every table and silently diverge
-    from the full recompute.  With it, the overlap set drives the
-    retire-then-append upsert in every delta builder; returns None when
-    the batch is genuinely disjoint (the appends stay pure)."""
+    A doc_id repeated INSIDE the batch is always an error (its shingles
+    would merge into one bogus signature and its postings and doc_stats
+    rows would double).  Without ``allow_recrawl`` any overlap with the
+    base is an error too — merging it blindly would double the doc in
+    every table and silently diverge from the full recompute.  With it,
+    the overlap set drives the retire-then-append upsert in every delta
+    frame; returns None when the batch is genuinely disjoint (the appends
+    stay pure)."""
     from ..operators.dedup import _docs
     base_ids = read_table(spark, "doc_stats", base_dir)
     if base_ids is None:
         raise ValueError(
             f"incremental update needs the base doc_stats table for "
             f"{base_dir} (run the full curate/index job first)")
-    overlap = (_docs(spark, batch_dir).select("doc_id")
-               .join(base_ids.select("doc_id"), "doc_id")
+    batch_ids = _docs(spark, batch_dir).select("doc_id")
+    n_rows, n_ids = batch_ids.agg(F.count(F.lit(1)),
+                                  F.countDistinct("doc_id")).first()
+    if n_rows != n_ids:
+        raise ValueError(
+            f"the batch holds {n_rows - n_ids} repeated doc_id row(s): "
+            f"{_COLLAPSE}")
+    overlap = (batch_ids.join(base_ids.select("doc_id"), "doc_id")
                .localCheckpoint())
     n = overlap.count()
     if n == 0:
@@ -340,9 +354,7 @@ def _recrawl_ids(spark, base_dir: str, batch_dir: str,
         raise ValueError(
             f"batch doc_ids already exist in the base snapshot "
             f"(first few: {ids}): pass allow_recrawl=True to retire the "
-            "stale rows and merge the new versions, or collapse "
-            "re-crawls to one row per doc_id upstream (latest-capture "
-            "semantics)")
+            f"stale rows and merge the new versions, or {_COLLAPSE}")
     return overlap
 
 
@@ -383,6 +395,5 @@ def incremental_update(spark: SparkSession, base_dir: str, batch_dir: str,
         paths[kind] = materialize(spark, kind, combined_dir,
                                   lambda k=kind: retr[k])
     for p in paths.values():
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            _write_lineage(p, base_dir, batch_dir, combined_dir)
+        _write_lineage(p, base_dir, batch_dir, combined_dir)
     return paths

@@ -1,10 +1,12 @@
-"""Size-targeted repartitioning + host-skew salting.
+"""Size-targeted repartitioning for the extraction stage.
 
 North-rule requirement: "explicit partition / shuffle / skew handling …
 size-targeted repartitioning by (url-hash, warc_ts), salting of skewed
 hosts".  The extraction stage is embarrassingly parallel per row, so the
 skew that matters is *byte-size* skew (a few giant pages / hot hosts
 serializing into one task), not key skew in a join (SURVEY.md §4.2).
+Host-level aggregations salt hot keys where they group
+(``domain_cap``'s two-stage top-K, ``salted_source_agg``).
 
 Strategy:
   * ``repartition_by_size``: one cheap JVM-side pre-pass
@@ -45,33 +47,3 @@ def repartition_by_size(pages: DataFrame,
     sc_default = pages.sparkSession.sparkContext.defaultParallelism
     n_parts = max(n_parts, min(sc_default, int(stats["n"]) or 1))
     return pages.repartition(n_parts, F.xxhash64("url"), F.col("warc_ts"))
-
-
-def host_of(url_col):
-    """Extract host from url (pure column expr, codegen-friendly)."""
-    return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)/", 1)
-
-
-def salted_host_key(pages: DataFrame, skew_bytes_threshold: int,
-                    salt_buckets: int = 16) -> DataFrame:
-    """Attach a ``host_key`` column for host-level aggregations: hosts whose
-    cumulative html bytes exceed the threshold get a salt suffix so a
-    downstream groupBy(host_key) cannot concentrate a hot host in one task.
-    (Used by host-level metrics rollups, not by the extraction map itself.)
-    """
-    host = host_of(F.col("url"))
-    hot = (pages
-           .groupBy(host.alias("host"))
-           .agg(F.sum(F.length("html")).alias("b"))
-           .filter(F.col("b") > skew_bytes_threshold)
-           .select("host", F.lit(True).alias("is_hot")))
-    return (pages
-            .withColumn("host", host)
-            .join(F.broadcast(hot), "host", "left")
-            .withColumn(
-                "host_key",
-                F.when(F.col("is_hot"),
-                       F.concat_ws("#", F.col("host"),
-                                   (F.xxhash64("url") % salt_buckets).cast("string")))
-                .otherwise(F.col("host")))
-            .drop("is_hot"))

@@ -29,6 +29,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,8 +54,13 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
             # At 10^12 rows both sides are hash-partitioned on url by the
             # shuffle; with Iceberg this would be a MERGE-on-read predicate.
             pages = pages.join(done, "url", "left_anti")
-        except Exception:
-            pass  # first run: no lineage yet
+        except AnalysisException as e:
+            # first run: no lineage/ yet, or only a crashed first write's
+            # debris (no data file).  A lineage that exists but cannot be
+            # read must not turn into a silent full re-extract.
+            if e.getCondition() not in ("PATH_NOT_FOUND",
+                                        "UNABLE_TO_INFER_SCHEMA"):
+                raise
 
     pages = repartition_by_size(pages, target_partition_bytes)
 

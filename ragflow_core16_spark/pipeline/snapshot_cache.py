@@ -18,19 +18,25 @@ whose own mtime does not change on in-place rewrite), so a regenerated
 fixture under an unchanged sf_dir misses the cache and a crashed write
 (no ``_SUCCESS``) never serves.
 
-Writes are atomic at the directory level: ``materialize`` builds into a
-unique temp sibling and renames into place, so two concurrent writers
-(a spark-submit job racing the bench session on the same corpus) never
-interleave part files in one directory — the loser's rename simply
-yields to the complete table the winner published.
+Every table is published by ``publish_dir``: written into a unique
+hidden temp sibling, then renamed into place.  A rename never merges
+into a non-empty directory, so concurrent writers (a spark-submit job
+racing the bench session) never interleave part files; debris at the
+target is renamed aside before it is removed, and a complete table
+another writer published first is kept.  ``materialize`` publishes only
+when no complete table exists.  A reader that already listed a table's
+files fails (and retries) only if a ``replace`` lands mid-scan;
+snapshot tables are never replaced once complete.
 """
 
 from __future__ import annotations
 
+import errno
 import hashlib
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 
 
 def _default_root() -> str:
@@ -78,46 +84,94 @@ def table_path(kind: str, sf_dir: str) -> str:
     return os.path.join(cache_root(), kind, corpus_fingerprint(sf_dir))
 
 
+def _complete(path: str) -> bool:
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def has_table(kind: str, sf_dir: str) -> bool:
+    """Whether a COMPLETE table exists for this (kind, corpus snapshot)."""
+    return _complete(table_path(kind, sf_dir))
+
+
 def read_table(spark, kind: str, sf_dir: str):
     """The written table for this (kind, corpus snapshot), or None if no
     COMPLETE table exists (the _SUCCESS marker is the certificate)."""
     path = table_path(kind, sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
+    if _complete(path):
         return spark.read.parquet(path)
     return None
 
 
-def atomic_write(df, path: str) -> None:
-    """Write ``df`` as parquet to ``path`` via a unique temp sibling +
-    rename: concurrent writers each build in isolation and the publish is
-    one directory move, so a reader (keyed on _SUCCESS inside the final
-    path) never observes interleaved part files from two jobs.  If a
-    complete table appeared while we were building, ours is discarded —
-    both builds are per-snapshot deterministic, so either is correct."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
-    df.write.mode("overwrite").parquet(tmp)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    # tear down a PARTIAL directory (crashed writer, no certificate) so
-    # the rename can land; losing a race here just re-raises into the
-    # winner's complete table on the next check
-    if os.path.exists(path):
-        shutil.rmtree(path, ignore_errors=True)
+def _sibling(path: str, tag: str) -> str:
+    """A unique hidden sibling of ``path`` (dot-prefixed, so no parquet
+    reader of the parent directory lists it)."""
+    head, name = os.path.split(path)
+    return os.path.join(head, f".{name}.{tag}-{uuid.uuid4().hex[:12]}")
+
+
+def _swap(build: str, path: str, replace: bool) -> None:
+    """Move the finished directory ``build`` to ``path`` by renames only.
+
+    A rename onto a non-empty directory fails rather than merging, so
+    whatever occupies ``path`` is first renamed to an ``.aside-`` sibling
+    and removed only once it is no longer ``path``.  Without ``replace``,
+    a complete table at ``path`` wins and ``build`` is left for the caller
+    to drop; if the occupant we moved aside turns out to be complete (a
+    writer published it after our check), it is put back instead of
+    ``build``.  If the final rename fails, the occupant is moved back."""
+    mine, aside = build, []
     try:
-        os.rename(tmp, path)
-    except OSError:
+        while True:
+            try:
+                os.rename(build, path)
+                return
+            except OSError as e:
+                if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                    raise
+            if build != mine:  # the table we were putting back lost again
+                aside.append(build)
+                build = mine
+            if not replace and _complete(path):
+                return
+            aside.append(_sibling(path, "aside"))
+            try:
+                os.rename(path, aside[-1])
+            except FileNotFoundError:
+                aside.pop()
+                continue
+            if not replace and _complete(aside[-1]):
+                build = aside.pop()
+    except BaseException:
+        if aside and not os.path.exists(path):
+            os.rename(aside.pop(), path)
+        raise
+    finally:
+        for d in aside:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
+def publish_dir(path: str, replace: bool = False):
+    """Yield a fresh temp sibling of ``path`` to write a table into; on a
+    clean exit swap it in (see ``_swap``), on an error drop it.  Readers
+    of ``path`` see the previous directory, none, or the new one — never
+    a mix of two writers' part files, and never a partial write."""
+    path = os.path.normpath(path)  # a trailing "/" would nest the sibling
+    tmp = _sibling(path, "tmp")
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    try:
+        yield tmp
+        _swap(tmp, path, replace)
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise
 
 
 def materialize(spark, kind: str, sf_dir: str, build) -> str:
-    """Write ``build()`` for this (kind, snapshot) if not already present
-    (idempotent, atomic — see ``atomic_write``).  Returns the table
-    path."""
+    """Write ``build()`` for this (kind, snapshot) unless a complete table
+    is already there (idempotent; published by ``publish_dir``).  Returns
+    the table path."""
     path = table_path(kind, sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        atomic_write(build(), path)
+    if not _complete(path):
+        with publish_dir(path) as tmp:
+            build().write.parquet(tmp)
     return path

@@ -179,10 +179,13 @@ def compact_cdx(spark, in_glob: str, out_dir: str,
     the written files' footers for the cluster index; no driver-side
     collection of index rows."""
     from pyspark.sql import functions as F
+
+    from ..pipeline.snapshot_cache import publish_dir
     df = spark.read.parquet(in_glob)
-    (df.repartitionByRange(n_shards, "surt", "ts_micros", "url")
-       .sortWithinPartitions("surt", "ts_micros", "url")
-       .write.mode("overwrite").parquet(out_dir))
+    with publish_dir(out_dir, replace=True) as tmp:
+        (df.repartitionByRange(n_shards, "surt", "ts_micros", "url")
+           .sortWithinPartitions("surt", "ts_micros", "url")
+           .write.parquet(tmp))
     shards = (spark.read.parquet(out_dir)
               .withColumn("shard", F.element_at(
                   F.split(F.input_file_name(), "/"), -1)))
@@ -191,5 +194,6 @@ def compact_cdx(spark, in_glob: str, out_dir: str,
                 F.max("surt").alias("last_surt"),
                 F.count(F.lit(1)).alias("n_captures"))
            .orderBy("first_surt"))
-    idx.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}.cluster_idx")
+    with publish_dir(f"{out_dir}.cluster_idx", replace=True) as tmp:
+        idx.coalesce(1).write.parquet(tmp)
     return idx

@@ -16,26 +16,31 @@ which the replay test asserts.
 
 Exactly-once design (the ``run_warc_to_cdx_stream`` contract):
   * File discovery state is the stream checkpoint — a landing file joins
-    exactly one micro-batch even across restarts.
-  * Batch application is idempotent per batch_id: the batch's document
-    copy is written once (skipped when its ``_SUCCESS`` exists — a
-    rewrite would change mtimes and orphan the fingerprint-keyed
-    tables), every table write goes through the atomic
-    ``materialize`` (complete tables are never rebuilt), and a version
-    is published by writing its ``_complete`` marker LAST, so a crash
-    mid-apply replays into the identical end state.
-  * ``LATEST`` (written by temp+rename) names the serving version; a
-    query session points ``RAG_CURATION_DIR``-routed operators at it by
-    reading the version's corpus dir like any sf_dir.
+    exactly one micro-batch even across restarts, and a batch whose sink
+    did not finish is replayed with the same files.
+  * There is no marker or pointer file.  A version is COMPLETE exactly
+    when all nine delta tables (``pipeline.incremental.DELTA_KINDS``) are
+    published under its corpus fingerprint — their ``_SUCCESS`` files are
+    the only certificate.  ``latest_version`` serves the complete version
+    with the highest batch id, so a crash at any point leaves the
+    previous complete version serving, and nothing needs repairing.
+  * Batch application is idempotent per batch_id: a complete version is
+    skipped, the batch's document copy is published once (a rewrite
+    would change mtimes and orphan the fingerprint-keyed tables), and
+    every table goes through ``materialize``, which never rebuilds a
+    complete table — so a replay after a crash mid-apply finishes the
+    missing tables and converges to the identical end state.
+  * A query session points ``RAG_CURATION_DIR``-routed operators at the
+    serving version by reading its corpus dir like any sf_dir.
   * A micro-batch that RE-DELIVERS ids already in the corpus (a re-crawl
     feed) becomes an upsert day: the surviving previous rows are
     rewritten once into a compacted corpus (hard links cannot drop rows
-    — a lakehouse format would take delete vectors instead) and the
-    delta runs with ``allow_recrawl=True``, retiring the stale index
-    rows.  On a replay after a mid-apply crash the compaction rewrite
-    changes the version fingerprint, so the replay simply rebuilds under
-    the fresh fingerprint and converges; the crashed attempt's tables
-    are unreferenced garbage.
+    — a lakehouse format would take delete vectors instead), published
+    by rename, and the delta runs with ``allow_recrawl=True``, retiring
+    the stale index rows.  On a replay after a mid-apply crash the
+    compaction rewrite changes the version fingerprint, so the replay
+    simply rebuilds under the fresh fingerprint and converges; the
+    crashed attempt's tables are unreferenced garbage.
 """
 
 from __future__ import annotations
@@ -83,73 +88,65 @@ def _full_build(spark: SparkSession, sf_dir: str) -> None:
 def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
                  state_dir: str) -> None:
     from ..pipeline.incremental import incremental_update
-    from ..pipeline.snapshot_cache import read_table
+    from ..pipeline.snapshot_cache import publish_dir, read_table
     vdir = os.path.join(state_dir, "versions", f"v{batch_id:05d}")
-    if os.path.exists(os.path.join(vdir, "_complete")):
-        return  # replayed batch: already fully applied
-    if batch_df.isEmpty():
-        return
+    if _version_complete(vdir) or batch_df.isEmpty():
+        return  # replayed batch already fully applied, or nothing new
     # 1. the batch's own document copy (write once; a replay reuses it)
-    bdocs = os.path.join(state_dir, "batches", f"b{batch_id:05d}",
-                         "documents.parquet")
+    bdir = os.path.join(state_dir, "batches", f"b{batch_id:05d}")
+    bdocs = os.path.join(bdir, "documents.parquet")
     if not os.path.exists(os.path.join(bdocs, "_SUCCESS")):
-        batch_df.write.mode("overwrite").parquet(bdocs)
-    bdir = os.path.dirname(bdocs)
+        with publish_dir(bdocs) as tmp:
+            batch_df.write.parquet(tmp)
     # 2. compose the new corpus version from the previous one + the batch
-    prev = _latest_complete(state_dir, before=batch_id)
+    prev = latest_version(state_dir, before=batch_id)
     vdocs = os.path.join(vdir, "documents.parquet")
     if prev is None:
         _link_tree(bdocs, vdocs)
         _full_build(spark, vdir)
+        return
+    # a crawl feed may RE-DELIVER ids it crawled before; detect via the
+    # previous version's per-doc stats (no document scan)
+    prev_ids = read_table(spark, "doc_stats", prev).select("doc_id")
+    recrawl = not (spark.read.parquet(bdocs).select("doc_id")
+                   .join(prev_ids, "doc_id").isEmpty())
+    if recrawl:
+        # upsert day: the new version's corpus must be COMPACTED (old
+        # rows of re-delivered ids dropped), which a hard-link
+        # composition cannot express — rewrite the surviving prev rows
+        # once, link the batch files in, and swap the result into place.
+        # A lakehouse format takes delete vectors instead; this is the
+        # plain-parquet equivalent, paid only on re-delivery days.
+        surv = (spark.read.parquet(os.path.join(prev, "documents.parquet"))
+                .join(spark.read.parquet(bdocs).select("doc_id"),
+                      "doc_id", "anti"))
+        with publish_dir(vdocs, replace=True) as tmp:
+            surv.write.parquet(tmp)
+            _link_tree(bdocs, tmp)
     else:
-        # a crawl feed may RE-DELIVER ids it crawled before; detect via
-        # the previous version's per-doc stats (no document scan)
-        prev_ids = read_table(spark, "doc_stats", prev).select("doc_id")
-        batch_ids = (spark.read.parquet(bdocs).select("doc_id")
-                     .join(prev_ids, "doc_id"))
-        recrawl = not batch_ids.isEmpty()
-        if recrawl:
-            # upsert day: the new version's corpus must be COMPACTED
-            # (old rows of re-delivered ids dropped), which a hard-link
-            # composition cannot express — rewrite the surviving prev
-            # rows once, then link the batch files in.  A lakehouse
-            # format takes delete vectors instead; this is the plain-
-            # parquet equivalent, paid only on re-delivery days.
-            surv = (spark.read.parquet(
-                        os.path.join(prev, "documents.parquet"))
-                    .join(spark.read.parquet(bdocs).select("doc_id"),
-                          "doc_id", "anti"))
-            surv.write.mode("overwrite").parquet(vdocs)
-            _link_tree(bdocs, vdocs)
-            incremental_update(spark, prev, bdir, vdir,
-                               allow_recrawl=True)
-        else:
-            _link_tree(bdocs, vdocs)
-            _link_tree(os.path.join(prev, "documents.parquet"), vdocs)
-            incremental_update(spark, prev, bdir, vdir)
-    # 3. publish: marker LAST, then the serving pointer
-    open(os.path.join(vdir, "_complete"), "w").close()
-    tmp = os.path.join(state_dir, ".LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(vdir)
-    os.replace(tmp, os.path.join(state_dir, "LATEST"))
+        _link_tree(bdocs, vdocs)
+        _link_tree(os.path.join(prev, "documents.parquet"), vdocs)
+    incremental_update(spark, prev, bdir, vdir, allow_recrawl=recrawl)
 
 
-def _latest_complete(state_dir: str, before: int) -> str | None:
+def _version_complete(vdir: str) -> bool:
+    from ..pipeline.incremental import DELTA_KINDS
+    from ..pipeline.snapshot_cache import has_table
+    return all(has_table(kind, vdir) for kind in DELTA_KINDS)
+
+
+def latest_version(state_dir: str, before: int | None = None) -> str | None:
+    """The serving corpus-version dir (usable as an sf_dir): the complete
+    version with the highest batch id (below ``before`` if given), or
+    None.  Entries whose name is not ``v<batch id>`` are ignored."""
     vroot = os.path.join(state_dir, "versions")
-    if not os.path.isdir(vroot):
-        return None
-    done = [v for v in sorted(os.listdir(vroot))
-            if v.startswith("v") and int(v[1:]) < before
-            and os.path.exists(os.path.join(vroot, v, "_complete"))]
-    return os.path.join(vroot, done[-1]) if done else None
-
-
-def latest_version(state_dir: str) -> str | None:
-    """The serving corpus-version dir (usable as an sf_dir), or None."""
-    p = os.path.join(state_dir, "LATEST")
-    if os.path.exists(p):
-        return open(p).read().strip()
+    names = os.listdir(vroot) if os.path.isdir(vroot) else []
+    versions = sorted(((int(n[1:]), n) for n in names
+                       if n[:1] == "v" and n[1:].isdecimal()), reverse=True)
+    for b, name in versions:
+        vdir = os.path.join(vroot, name)
+        if (before is None or b < before) and _version_complete(vdir):
+            return vdir
     return None
 
 

@@ -108,16 +108,18 @@ def run_warc_to_cdx_stream(spark: SparkSession, input_dir: str,
                            once: bool = True):
     """WARC landing zone → CDX capture index, one sorted parquet shard set
     per micro-batch — how a continuous crawl (CC-NEWS) keeps its index
-    current without re-scanning old shards.  Each batch writes to its own
-    ``b{batch:05d}`` subdirectory with mode=overwrite, so foreachBatch's
-    at-least-once replay is idempotent (a replayed batch rewrites the
-    identical bytes).  The union of batch directories is the live index;
+    current without re-scanning old shards.  Each batch publishes its own
+    ``b{batch:05d}`` subdirectory by rename (``publish_dir``), so
+    foreachBatch's at-least-once replay is idempotent (a replayed batch
+    keeps the identical complete shard set; a crashed attempt's partial
+    one never shows).  The union of batch directories is the live index;
     a periodic compaction into ``cluster.idx`` order is a plain batch job
     over the same rows.
 
     ``filename`` carries the real landing-zone file name (the CDX field a
     consumer feeds to a range request); file identity inside the walk is
     crc32(path) — deterministic, so replays agree."""
+    from ..pipeline.snapshot_cache import publish_dir
     from ..sources.cdx import cdx_entries_df, surt_expr
 
     files = (spark.readStream.format("binaryFile")
@@ -143,8 +145,10 @@ def run_warc_to_cdx_stream(spark: SparkSession, input_dir: str,
         out = (entries.join(F.broadcast(names), "file_id")
                .withColumn("surt", surt_expr(F.col("url")))
                .sortWithinPartitions("surt"))
-        (out.write.mode("overwrite")
-            .parquet(f"{cdx_dir}/b{batch_id:05d}"))
+        # a replayed batch re-reads the same files: a complete shard
+        # from the crashed attempt is already right and is kept
+        with publish_dir(f"{cdx_dir}/b{batch_id:05d}") as tmp:
+            out.write.parquet(tmp)
 
     writer = (files.writeStream
               .foreachBatch(sink)

@@ -70,3 +70,45 @@ class TestChunkStore:
         assert delete_chunks(spark, store, ["nonexistent-id"]) == 0
         import os
         assert not os.path.exists(store + ".tmp")
+
+    def test_failed_swap_leaves_store_unchanged(self, spark, store, tmp_path,
+                                                monkeypatch):
+        """The step that puts the kept rows in place of the store fails
+        (a task of a write onto the store path, or the rename onto it):
+        the store must stay readable with every row it had, and no temp
+        or aside sibling may be left."""
+        import errno
+        import os
+        import shutil
+
+        from pyspark.sql import DataFrameWriter
+        from pyspark.sql import functions as F
+        mine = str(tmp_path / "chunks")
+        shutil.copytree(store, mine)
+        before = sorted(r.chunk_id for r in
+                        spark.read.parquet(mine).select("chunk_id").collect())
+        real_parquet, real_rename = DataFrameWriter.parquet, os.rename
+
+        def parquet(self, path, *a, **kw):
+            if os.path.abspath(path) != mine:
+                return real_parquet(self, path, *a, **kw)
+            bad = self._df.withColumn("chunk_id", F.raise_error(
+                F.concat(F.lit("injected "), F.col("chunk_id")))
+                .cast("string"))
+            return real_parquet(bad.write.mode("overwrite"), path)
+
+        def rename(src, dst):
+            if dst == mine and ".tmp-" in src and not os.path.exists(mine):
+                raise OSError(errno.EIO, "injected", dst)
+            return real_rename(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", parquet)
+            m.setattr(os, "rename", rename)
+            with pytest.raises(Exception):
+                delete_chunks(spark, mine, before[:2])
+        after = sorted(r.chunk_id for r in
+                       spark.read.parquet(mine).select("chunk_id").collect())
+        assert after == before
+        assert [d for d in os.listdir(tmp_path)
+                if ".tmp" in d or ".aside-" in d] == []

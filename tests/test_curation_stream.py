@@ -86,10 +86,14 @@ class TestCurationIndexStream:
 
     def test_crash_mid_apply_replays_to_same_state(self, spark, tmp_path,
                                                    monkeypatch):
-        """Kill between the version's table writes and its ``_complete``
-        marker: the next drain re-applies the batch and converges (the
-        materialize layer skips the complete tables, the marker lands,
-        LATEST advances)."""
+        """Kill before the version's last table is published: the version
+        is not served, and the next drain re-applies the batch and
+        converges (the materialize layer skips the complete tables and
+        publishes the missing one)."""
+        import shutil
+
+        from ragflow_core16_spark.pipeline.snapshot_cache import (
+            read_table, table_path)
         from ragflow_core16_spark.streaming.curation_stream import (
             latest_version, run_curation_index_stream)
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
@@ -103,9 +107,9 @@ class TestCurationIndexStream:
                                       str(tmp_path / "ckpt"))
         q.awaitTermination(300)
         v = latest_version(state)
-        # simulate the crash: yank the completion marker and the pointer
-        os.remove(os.path.join(v, "_complete"))
-        os.remove(os.path.join(state, "LATEST"))
+        # simulate the crash: one of the version's tables never landed
+        shutil.rmtree(table_path("web_decisions", v))
+        assert latest_version(state) is None
         # a NEW drain (fresh checkpoint — the old one considers the files
         # consumed) over the same zone must re-apply batch 0 idempotently
         _deep_clean(spark)
@@ -113,9 +117,69 @@ class TestCurationIndexStream:
                                       str(tmp_path / "ckpt2"))
         q.awaitTermination(300)
         assert latest_version(state) == v
-        assert os.path.exists(os.path.join(v, "_complete"))
-        from ragflow_core16_spark.pipeline.snapshot_cache import read_table
         assert read_table(spark, "web_decisions", v) is not None
+
+    def test_crash_in_newest_version_serves_previous(self, spark, tmp_path,
+                                                     monkeypatch):
+        """A crash that leaves one table of the NEWEST version unpublished
+        (its micro-batch uncommitted in the checkpoint) must serve the
+        previous complete version — there is no pointer to repair — and
+        the restarted stream replays the batch and converges."""
+        import shutil
+
+        from ragflow_core16_spark.pipeline.snapshot_cache import (
+            read_table, table_path)
+        from ragflow_core16_spark.streaming.curation_stream import (
+            latest_version, run_curation_index_stream)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        landing = str(tmp_path / "landing")
+        state = str(tmp_path / "state")
+        ckpt = str(tmp_path / "ckpt")
+
+        def drain():
+            _deep_clean(spark)
+            q = run_curation_index_stream(spark, landing, state, ckpt)
+            q.awaitTermination(300)
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        for lo, hi in ((0, 200), (200, 300)):
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
+                .coalesce(1).write.mode("append").parquet(landing)
+            drain()
+            if lo == 0:
+                v1 = latest_version(state)
+        v2 = latest_version(state)
+        assert v1 is not None and v2 != v1
+        want = sorted(map(tuple, read_table(spark, "dedup_labels", v2)
+                          .collect()))
+        shutil.rmtree(table_path("dedup_labels", v2))
+        for name in ("1", ".1.crc"):  # batch 1 never committed
+            os.remove(os.path.join(ckpt, "commits", name))
+        assert latest_version(state) == v1
+        drain()
+        assert latest_version(state) == v2
+        assert sorted(map(tuple, read_table(spark, "dedup_labels", v2)
+                          .collect())) == want
+
+    def test_version_pick_parses_batch_ids(self, tmp_path, monkeypatch):
+        """The serving version is the complete one with the highest
+        NUMERIC batch id (v100000 after v99999, not before it); names
+        that are not v<digits> are ignored, however complete they look."""
+        from ragflow_core16_spark.pipeline.snapshot_cache import table_path
+        from ragflow_core16_spark.streaming.curation_stream import (
+            latest_version)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        state = tmp_path / "state"
+        for name in ("v99999", "v100000", "vfoo", "v12x"):
+            vdir = str(state / "versions" / name)
+            os.makedirs(os.path.join(vdir, "documents.parquet"))
+            for kind in KINDS:
+                os.makedirs(table_path(kind, vdir))
+                open(os.path.join(table_path(kind, vdir), "_SUCCESS"),
+                     "w").close()
+        os.makedirs(state / "versions" / "v200000")  # incomplete
+        assert latest_version(str(state)) == str(
+            state / "versions" / "v100000")
 
 
 def _compute_relations(spark, sf_dir):

@@ -375,6 +375,31 @@ class TestIngestContractEdges:
         with pytest.raises(ValueError, match="latest-capture"):
             incremental_update(spark, base_d, batch_d, comb_d)
 
+    def test_doc_id_repeated_inside_batch_is_rejected(self, spark,
+                                                       tmp_path,
+                                                       monkeypatch):
+        """A feed that delivers the same doc_id twice in ONE batch would
+        merge both captures' shingles into one signature and double its
+        postings and doc_stats rows — the merge must refuse with the same
+        collapse-upstream guidance as a base overlap."""
+        from ragflow_core16_spark.pipeline.incremental import (
+            incremental_update)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "wh"))
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        base_d, batch_d, comb_d = (str(tmp_path / x)
+                                   for x in ("base", "batch", "comb"))
+        docs.filter(F.col("doc_id") < 300).coalesce(1) \
+            .write.parquet(f"{base_d}/documents.parquet")
+        new = docs.filter(F.col("doc_id") >= 300)
+        batch = new.unionByName(new.filter(F.col("doc_id") == 301))
+        batch.coalesce(1).write.parquet(f"{batch_d}/documents.parquet")
+        docs.unionByName(batch.filter(F.col("doc_id") == 301)).coalesce(1) \
+            .write.parquet(f"{comb_d}/documents.parquet")
+        _deep_clean(spark)
+        self._full_base(spark, base_d)
+        with pytest.raises(ValueError, match="latest-capture"):
+            incremental_update(spark, base_d, batch_d, comb_d)
+
     def test_empty_batch_is_a_valid_noop_day(self, spark, tmp_path,
                                              monkeypatch):
         """A day with no arrivals still publishes tables under the new

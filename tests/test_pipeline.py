@@ -156,3 +156,24 @@ class TestRunPipeline:
                 "n_oversize", "bytes_in", "chunks_out"} <= cols
         agg = m.agg(F.sum("n_rows")).collect()[0][0]
         assert agg == 10
+
+    def test_unreadable_lineage_is_not_a_first_run(self, spark, tmp_path):
+        """Only a missing lineage/ (or one holding no data file, as a crash
+        inside the first lineage write leaves it) means "first run".  A
+        lineage whose files cannot be read must fail the resume, not
+        silently re-extract every page."""
+        import glob
+        import os
+        out = str(tmp_path / "c")
+        pages = pages_df(spark, 10)
+        run_extraction(spark, pages, out, run_id="r1")
+        for f in glob.glob(f"{out}/lineage/*.parquet"):
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+        with pytest.raises(Exception):
+            run_extraction(spark, pages, out, run_id="r2")
+        assert spark.read.parquet(f"{out}/extracted").count() == 10
+        # crashed first lineage write: the directory holds only debris
+        fresh = str(tmp_path / "fresh")
+        os.makedirs(f"{fresh}/lineage/_temporary/0")
+        assert run_extraction(spark, pages, fresh, run_id="r1")["rows"] == 10

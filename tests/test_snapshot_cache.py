@@ -368,3 +368,111 @@ class TestCacheHardening:
                        lambda: spark.range(99).toDF("doc_id"))
         assert os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns == mtime
         assert SC.read_table(spark, "t_atomic", sf).count() == 5
+
+    def test_table_completed_during_swap_survives(self, spark, tmp_path,
+                                                  monkeypatch):
+        """A competing writer publishes a complete table after our build
+        finished and our publish has seen only crashed-writer debris: the
+        competitor's table must stay published, not be deleted in favour
+        of ours."""
+        import os
+        import shutil
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        path = SC.table_path("t_race", SF)
+        parent = os.path.dirname(path)
+        os.makedirs(path)
+        open(os.path.join(path, "part-junk.parquet"), "w").write("junk")
+        theirs = str(tmp_path / "theirs")
+        spark.range(7).toDF("doc_id").write.parquet(theirs)
+        real_exists = os.path.exists
+        fired = []
+
+        def exists(p):
+            got = real_exists(p)
+            built = any(".tmp-" in d and real_exists(
+                            os.path.join(parent, d, "_SUCCESS"))
+                        for d in os.listdir(parent))
+            if p == os.path.join(path, "_SUCCESS") and built and not fired:
+                # the competitor moves the debris away and publishes
+                fired.append(p)
+                shutil.move(path, str(tmp_path / "their-debris"))
+                os.rename(theirs, path)
+            return got
+
+        with monkeypatch.context() as m:
+            m.setattr(os.path, "exists", exists)
+            SC.materialize(spark, "t_race", SF,
+                           lambda: spark.range(5).toDF("doc_id"))
+        assert fired
+        assert SC.read_table(spark, "t_race", SF).count() == 7
+        assert [d for d in os.listdir(parent)
+                if ".tmp-" in d or ".aside-" in d] == []
+
+    def test_partial_debris_leaves_path_before_removal(
+            self, spark, tmp_path, monkeypatch):
+        """Crashed-writer debris at the table path is replaced, but only
+        after it has been renamed away: nothing is ever recursively
+        deleted at the published path itself, and no temp or aside
+        sibling is left behind."""
+        import os
+        import shutil
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        path = SC.table_path("t_debris", SF)
+        os.makedirs(path)
+        open(os.path.join(path, "part-junk.parquet"), "w").write("junk")
+        removed = []
+        real_rmtree = shutil.rmtree
+
+        def rmtree(p, *a, **kw):
+            removed.append(os.path.abspath(p))
+            return real_rmtree(p, *a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(shutil, "rmtree", rmtree)
+            SC.materialize(spark, "t_debris", SF,
+                           lambda: spark.range(3).toDF("doc_id"))
+        assert os.path.abspath(path) not in removed
+        assert SC.read_table(spark, "t_debris", SF).count() == 3
+        assert not os.path.exists(os.path.join(path, "part-junk.parquet"))
+        parent = os.path.dirname(path)
+        assert [d for d in os.listdir(parent)
+                if ".tmp-" in d or ".aside-" in d] == []
+
+    def test_concurrent_publishers_never_mix(self, tmp_path):
+        """Many writers race to publish over crashed-writer debris: the
+        published directory holds exactly one writer's files, and no temp
+        or aside sibling survives."""
+        import os
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        path = str(tmp_path / "t")
+        os.makedirs(path)
+        open(os.path.join(path, "part-junk"), "w").close()
+
+        def writer(i):
+            with SC.publish_dir(path) as tmp:
+                os.makedirs(tmp)
+                for j in range(3):
+                    open(os.path.join(tmp, f"part-{j}-w{i}"), "w").close()
+                open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(16) as ex:
+                futures = [ex.submit(writer, i) for i in range(64)]
+                for f in futures:
+                    f.result(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        files = sorted(os.listdir(path))
+        assert len(files) == 4 and "_SUCCESS" in files
+        assert len({f.rsplit("-w", 1)[1] for f in files
+                    if f.startswith("part-")}) == 1
+        assert os.listdir(tmp_path) == ["t"]
