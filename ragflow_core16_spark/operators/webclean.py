@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import materialize, read_table
+
 LINE_WORDS = 10
 _BOILER = "subscribe to our newsletter follow us on social media"
 _LOREM = "lorem ipsum dolor sit amet "
@@ -319,7 +321,7 @@ def corpus_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``corpus_keep``) reuses the persisted relation instead of re-running
     the LSH chain — the local-mode analogue of writing the decision
     columns once and scanning them thereafter."""
-    scan = _web_decisions_scan(spark, sf_dir)
+    scan = read_table(spark, "web_decisions", sf_dir)
     if scan is not None:
         return scan.select("doc_id", "gopher_pass", "c4_pass",
                            "dedup_kept", "clean", "corpus_keep")
@@ -1155,7 +1157,7 @@ def web_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot time), the whole query is a SCAN of it: the deployment
     shape at 100 TB, where the dedup chain is computed once per snapshot,
     never per query."""
-    scan = _web_decisions_scan(spark, sf_dir)
+    scan = read_table(spark, "web_decisions", sf_dir)
     if scan is not None:
         return (scan.select(
                     "doc_id",
@@ -1202,11 +1204,6 @@ ORDER BY doc_id
 # Staleness is structural, not temporal: the table path embeds a
 # fingerprint of the backing documents files (name+size+mtime), so a
 # regenerated fixture under an unchanged sf_dir simply misses the cache.
-
-def web_decisions_path(sf_dir: str) -> str:
-    from ..pipeline.snapshot_cache import table_path
-    return table_path("web_decisions", sf_dir)
-
 
 def web_decisions_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full per-document decision relation, computed: content gates
@@ -1260,17 +1257,8 @@ def gate_columns_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def materialize_web_decisions(spark: SparkSession, sf_dir: str) -> str:
     """Write the decision table for this corpus snapshot (idempotent: an
     existing complete table is left alone).  Returns the table path."""
-    from ..pipeline.snapshot_cache import materialize
     return materialize(spark, "web_decisions", sf_dir,
                        lambda: web_decisions_unordered(spark, sf_dir))
-
-
-def _web_decisions_scan(spark: SparkSession, sf_dir: str):
-    """The written decision table for ``sf_dir``, or None if no complete
-    table exists (the _SUCCESS marker is the completeness certificate —
-    a crashed write never serves)."""
-    from ..pipeline.snapshot_cache import read_table
-    return read_table(spark, "web_decisions", sf_dir)
 
 
 _FUNNEL_GATES = ("gopher", "c4", "dedup", "decontam", "robots",
@@ -1285,7 +1273,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition up to and including it.  One scan (or one decision
     computation), ONE aggregation, then a 7-row ``stack`` unpivot — no
     joins, no second pass, any corpus size."""
-    scan = _web_decisions_scan(spark, sf_dir)
+    scan = read_table(spark, "web_decisions", sf_dir)
     d = scan if scan is not None else web_decisions_unordered(spark, sf_dir)
     conds = {
         "gopher": F.col("gopher_pass"), "c4": F.col("c4_pass"),
@@ -1413,7 +1401,6 @@ def _site_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per snapshot (it is a pure function of the corpus) and strips
     against the frozen table; with a written table
     (``materialize_site_boilerplate``) this is a scan."""
-    from ..pipeline.snapshot_cache import read_table
     scan = read_table(spark, "site_boilerplate", sf_dir)
     if scan is not None:
         return scan.select("site", "ptext")
@@ -1433,7 +1420,6 @@ def _site_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def materialize_site_boilerplate(spark: SparkSession, sf_dir: str) -> str:
     """Write the per-snapshot site-boilerplate lexicon (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
     return materialize(spark, "site_boilerplate", sf_dir,
                        lambda: _site_boilerplate(spark, sf_dir))
 

@@ -19,8 +19,10 @@ writes; Iceberg ``MERGE INTO``/``DELETE FROM`` replace the rewrite in a
 real deployment — the logical ops are identical).  Adds append part
 files.  Deletes (and so updates) write the kept rows ONCE, via LEFT ANTI
 join, into a temp sibling that is renamed over the store
-(``snapshot_cache.publish_dir``): a crash or failed rename leaves the
-previous store whole and readable, never a half-rewritten one.
+(``snapshot_cache.publish_dir``, on the store path's own filesystem):
+a crash or failed rename leaves the previous store whole and readable,
+never a half-rewritten one (on an object store, where a rename is a copy,
+only a crash before the swap does).
 """
 
 from __future__ import annotations

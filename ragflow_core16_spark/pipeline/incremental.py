@@ -87,13 +87,8 @@ _COLLAPSE = ("collapse re-crawls to one row per doc_id upstream "
 
 
 def _require_base(spark, kinds, base_dir) -> dict[str, DataFrame]:
-    out = {}
-    missing = []
-    for kind in kinds:
-        t = read_table(spark, kind, base_dir)
-        if t is None:
-            missing.append(kind)
-        out[kind] = t
+    out = {kind: read_table(spark, kind, base_dir) for kind in kinds}
+    missing = [kind for kind, t in out.items() if t is None]
     if missing:
         raise ValueError(
             f"incremental update needs complete base tables for {base_dir}; "
@@ -332,11 +327,7 @@ def _recrawl_ids(spark, base_dir: str, batch_dir: str,
     frame; returns None when the batch is genuinely disjoint (the appends
     stay pure)."""
     from ..operators.dedup import _docs
-    base_ids = read_table(spark, "doc_stats", base_dir)
-    if base_ids is None:
-        raise ValueError(
-            f"incremental update needs the base doc_stats table for "
-            f"{base_dir} (run the full curate/index job first)")
+    base_ids = _require_base(spark, ("doc_stats",), base_dir)["doc_stats"]
     batch_ids = _docs(spark, batch_dir).select("doc_id")
     n_rows, n_ids = batch_ids.agg(F.count(F.lit(1)),
                                   F.countDistinct("doc_id")).first()
@@ -373,27 +364,18 @@ def incremental_update(spark: SparkSession, base_dir: str, batch_dir: str,
     batch supplies the new versions; ``combined_dir`` must hold the
     correspondingly compacted documents table)."""
     recrawl = _recrawl_ids(spark, base_dir, batch_dir, allow_recrawl)
+    args = (spark, base_dir, batch_dir)
     paths: dict[str, str] = {}
-    dedup = dedup_index_delta_frames(spark, base_dir, batch_dir,
-                                     recrawl_ids=recrawl)
-    for kind in DEDUP_KINDS:
-        paths[kind] = materialize(spark, kind, combined_dir,
-                                  lambda k=kind: dedup[k])
-    decon = decon_delta_frames(spark, base_dir, batch_dir,
-                               recrawl_ids=recrawl)
-    for kind in DECON_KINDS:
-        paths[kind] = materialize(spark, kind, combined_dir,
-                                  lambda k=kind: decon[k])
-    paths["web_decisions"] = materialize(
-        spark, "web_decisions", combined_dir,
-        lambda: web_decisions_delta_frame(spark, base_dir, batch_dir,
-                                          combined_dir,
-                                          recrawl_ids=recrawl))
-    retr = retrieval_index_delta_frames(spark, base_dir, batch_dir,
-                                        recrawl_ids=recrawl)
-    for kind in RETRIEVAL_KINDS:
-        paths[kind] = materialize(spark, kind, combined_dir,
-                                  lambda k=kind: retr[k])
+    # in dependency order: each step's frames are built only after the
+    # tables of the steps before it are published
+    for step in (lambda: dedup_index_delta_frames(*args, recrawl),
+                 lambda: decon_delta_frames(*args, recrawl),
+                 lambda: {"web_decisions": web_decisions_delta_frame(
+                     *args, combined_dir, recrawl)},
+                 lambda: retrieval_index_delta_frames(*args, recrawl)):
+        for kind, df in step().items():
+            paths[kind] = materialize(spark, kind, combined_dir,
+                                      lambda d=df: d)
     for p in paths.values():
         _write_lineage(p, base_dir, batch_dir, combined_dir)
     return paths

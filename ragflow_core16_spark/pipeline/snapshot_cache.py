@@ -24,9 +24,10 @@ into a non-empty directory, so concurrent writers (a spark-submit job
 racing the bench session) never interleave part files; debris at the
 target is renamed aside before it is removed, and a complete table
 another writer published first is kept.  ``materialize`` publishes only
-when no complete table exists.  A reader that already listed a table's
-files fails (and retries) only if a ``replace`` lands mid-scan;
-snapshot tables are never replaced once complete.
+when no complete table exists, so a snapshot table never changes once
+complete.  Paths published with ``replace`` (curate-job outputs, the
+chunk store, compacted CDX) do change: a scan already running on one
+when the swap lands fails, and the caller has to re-run it.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ import os
 import shutil
 import uuid
 from contextlib import contextmanager
+from types import SimpleNamespace
 
 
 def _default_root() -> str:
@@ -84,13 +86,15 @@ def table_path(kind: str, sf_dir: str) -> str:
     return os.path.join(cache_root(), kind, corpus_fingerprint(sf_dir))
 
 
-def _complete(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+#: directory operations on a plain (local) path, looked up per call
+_LOCAL = SimpleNamespace(
+    exists=lambda p: os.path.exists(p),
+    rename=lambda src, dst: os.rename(src, dst),
+    rmtree=lambda p: shutil.rmtree(p, ignore_errors=True))
 
 
-def has_table(kind: str, sf_dir: str) -> bool:
-    """Whether a COMPLETE table exists for this (kind, corpus snapshot)."""
-    return _complete(table_path(kind, sf_dir))
+def _complete(path: str, fs=_LOCAL) -> bool:
+    return fs.exists(f"{path}/_SUCCESS")
 
 
 def read_table(spark, kind: str, sf_dir: str):
@@ -102,14 +106,44 @@ def read_table(spark, kind: str, sf_dir: str):
     return None
 
 
+def _hadoop_fs(uri: str) -> SimpleNamespace:
+    """The same operations on a scheme-qualified path (``file:``,
+    ``hdfs:``, ``s3a:`` ...) through the Hadoop FileContext Spark writes
+    it with.  A rename never replaces an existing destination, like a
+    POSIX rename onto a non-empty directory; it is atomic where the
+    store's rename is (local disk, HDFS) and a copy on object stores."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+    sc = SparkContext.getOrCreate()
+    hfs = sc._jvm.org.apache.hadoop.fs
+    fc = hfs.FileContext.getFileContext(sc._jvm.java.net.URI(uri),
+                                        sc._jsc.hadoopConfiguration())
+    no_overwrite = sc._gateway.new_array(hfs.Options.Rename, 0)
+
+    def rename(src: str, dst: str) -> None:
+        try:
+            fc.rename(hfs.Path(src), hfs.Path(dst), no_overwrite)
+        except Py4JJavaError as e:
+            cls = e.java_exception.getClass().getName()
+            if cls.endswith(".FileAlreadyExistsException"):
+                raise FileExistsError(errno.EEXIST, cls, dst) from None
+            if cls == "java.io.FileNotFoundException":
+                raise FileNotFoundError(errno.ENOENT, cls, src) from None
+            raise
+
+    return SimpleNamespace(
+        exists=lambda p: fc.util().exists(hfs.Path(p)), rename=rename,
+        rmtree=lambda p: fc.delete(hfs.Path(p), True))
+
+
 def _sibling(path: str, tag: str) -> str:
     """A unique hidden sibling of ``path`` (dot-prefixed, so no parquet
     reader of the parent directory lists it)."""
-    head, name = os.path.split(path)
-    return os.path.join(head, f".{name}.{tag}-{uuid.uuid4().hex[:12]}")
+    head, sep, name = path.rpartition("/")
+    return f"{head}{sep}.{name}.{tag}-{uuid.uuid4().hex[:12]}"
 
 
-def _swap(build: str, path: str, replace: bool) -> None:
+def _swap(fs, build: str, path: str, replace: bool) -> None:
     """Move the finished directory ``build`` to ``path`` by renames only.
 
     A rename onto a non-empty directory fails rather than merging, so
@@ -123,7 +157,7 @@ def _swap(build: str, path: str, replace: bool) -> None:
     try:
         while True:
             try:
-                os.rename(build, path)
+                fs.rename(build, path)
                 return
             except OSError as e:
                 if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
@@ -131,39 +165,42 @@ def _swap(build: str, path: str, replace: bool) -> None:
             if build != mine:  # the table we were putting back lost again
                 aside.append(build)
                 build = mine
-            if not replace and _complete(path):
+            if not replace and _complete(path, fs):
                 return
             aside.append(_sibling(path, "aside"))
             try:
-                os.rename(path, aside[-1])
+                fs.rename(path, aside[-1])
             except FileNotFoundError:
                 aside.pop()
                 continue
-            if not replace and _complete(aside[-1]):
+            if not replace and _complete(aside[-1], fs):
                 build = aside.pop()
     except BaseException:
-        if aside and not os.path.exists(path):
-            os.rename(aside.pop(), path)
+        if aside and not fs.exists(path):
+            fs.rename(aside.pop(), path)
         raise
     finally:
         for d in aside:
-            shutil.rmtree(d, ignore_errors=True)
+            fs.rmtree(d)
 
 
 @contextmanager
 def publish_dir(path: str, replace: bool = False):
     """Yield a fresh temp sibling of ``path`` to write a table into; on a
-    clean exit swap it in (see ``_swap``), on an error drop it.  Readers
-    of ``path`` see the previous directory, none, or the new one — never
-    a mix of two writers' part files, and never a partial write."""
-    path = os.path.normpath(path)  # a trailing "/" would nest the sibling
+    clean exit swap it in (see ``_swap``), on an error drop it.  A
+    scheme-qualified path (``s3a://bucket/t``, ``file:/t``) is swapped
+    on its own filesystem, a plain path on the local one.  Where that
+    filesystem renames atomically (local disk, HDFS), readers of ``path``
+    see the previous directory, none, or the new one — never a mix of
+    two writers' part files, and never a partial write."""
+    path = path.rstrip("/") or "/"  # a trailing "/" would nest the sibling
+    fs = _hadoop_fs(path) if ":" in path.split("/", 1)[0] else _LOCAL
     tmp = _sibling(path, "tmp")
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     try:
         yield tmp
-        _swap(tmp, path, replace)
+        _swap(fs, tmp, path, replace)
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        fs.rmtree(tmp)
 
 
 def materialize(spark, kind: str, sf_dir: str, build) -> str:

@@ -2,45 +2,39 @@
 landing zone drives the curation/dedup/retrieval snapshot tables through
 the SAME delta merges as ``jobs/curate_job.py --incremental``.
 
-A continuous ingest drops parquet files of new documents into a landing
-directory; each micro-batch plays the role of a daily batch.  The sink
-(``foreachBatch``) maintains a chain of corpus VERSIONS under a state
-directory — every version's ``documents.parquet`` is built by
-HARD-LINKING the previous version's part files plus the batch's files
-(metadata-only snapshot composition, the single-filesystem analogue of
-an Iceberg snapshot manifest: no document byte is ever copied), and the
-snapshot tables for the new version come from
-``pipeline.incremental.incremental_update`` — so the streamed state is
-byte-comparable to a batch build over the same corpus by construction,
-which the replay test asserts.
+Each micro-batch of parquet files dropped into the landing directory
+plays the role of a daily batch.  The sink (``foreachBatch``) keeps a
+chain of corpus VERSIONS under a state directory: a version's
+``documents.parquet`` HARD-LINKS the previous version's part files plus
+the batch's (snapshot composition without copying a byte), and its
+snapshot tables come from ``pipeline.incremental.incremental_update`` —
+so the streamed state is byte-comparable to a batch build over the same
+corpus, which the replay test asserts.
 
-Exactly-once design (the ``run_warc_to_cdx_stream`` contract):
-  * File discovery state is the stream checkpoint — a landing file joins
-    exactly one micro-batch even across restarts, and a batch whose sink
-    did not finish is replayed with the same files.
-  * There is no marker or pointer file.  A version is COMPLETE exactly
-    when all nine delta tables (``pipeline.incremental.DELTA_KINDS``) are
-    published under its corpus fingerprint — their ``_SUCCESS`` files are
-    the only certificate.  ``latest_version`` serves the complete version
-    with the highest batch id, so a crash at any point leaves the
-    previous complete version serving, and nothing needs repairing.
-  * Batch application is idempotent per batch_id: a complete version is
+Crash and replay:
+  * The stream checkpoint holds file discovery: a landing file joins
+    exactly one micro-batch, and a batch whose sink did not finish is
+    replayed with the same files.
+  * A version is COMPLETE exactly when all nine delta tables
+    (``pipeline.incremental.DELTA_KINDS``) carry ``_SUCCESS`` under its
+    corpus fingerprint; there is no marker or pointer file.
+    ``latest_version`` serves the complete version with the highest
+    batch id, so after a crash the previous complete version serves
+    until the replay completes the new one.
+  * Applying a batch is idempotent per batch_id: a complete version is
     skipped, the batch's document copy is published once (a rewrite
     would change mtimes and orphan the fingerprint-keyed tables), and
-    every table goes through ``materialize``, which never rebuilds a
-    complete table — so a replay after a crash mid-apply finishes the
-    missing tables and converges to the identical end state.
-  * A query session points ``RAG_CURATION_DIR``-routed operators at the
-    serving version by reading its corpus dir like any sf_dir.
+    ``materialize`` never rebuilds a complete table — a replay builds
+    only the missing tables and reaches the same end state.
   * A micro-batch that RE-DELIVERS ids already in the corpus (a re-crawl
-    feed) becomes an upsert day: the surviving previous rows are
-    rewritten once into a compacted corpus (hard links cannot drop rows
-    — a lakehouse format would take delete vectors instead), published
-    by rename, and the delta runs with ``allow_recrawl=True``, retiring
-    the stale index rows.  On a replay after a mid-apply crash the
-    compaction rewrite changes the version fingerprint, so the replay
-    simply rebuilds under the fresh fingerprint and converges; the
-    crashed attempt's tables are unreferenced garbage.
+    feed) is an upsert day: the surviving previous rows are rewritten
+    once into a compacted corpus (hard links cannot drop rows), published
+    by rename, and the delta runs with ``allow_recrawl=True``.  A replay
+    of such a batch redoes the compaction, which changes the version
+    fingerprint, so it rebuilds every table under the new fingerprint and
+    leaves the crashed attempt's tables unreferenced.
+
+A query session reads the serving version's directory like any sf_dir.
 """
 
 from __future__ import annotations
@@ -131,8 +125,10 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
 
 def _version_complete(vdir: str) -> bool:
     from ..pipeline.incremental import DELTA_KINDS
-    from ..pipeline.snapshot_cache import has_table
-    return all(has_table(kind, vdir) for kind in DELTA_KINDS)
+    from ..pipeline.snapshot_cache import cache_root, corpus_fingerprint
+    fp = corpus_fingerprint(vdir)  # one walk of the version's part files
+    return all(os.path.exists(os.path.join(cache_root(), k, fp, "_SUCCESS"))
+               for k in DELTA_KINDS)
 
 
 def latest_version(state_dir: str, before: int | None = None) -> str | None:

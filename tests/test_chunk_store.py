@@ -112,3 +112,19 @@ class TestChunkStore:
         assert after == before
         assert [d for d in os.listdir(tmp_path)
                 if ".tmp" in d or ".aside-" in d] == []
+
+    def test_delete_on_uri_store(self, spark, store, tmp_path):
+        """A store addressed by a scheme-qualified path (as a warehouse on
+        ``s3a://`` or ``hdfs://`` is) is rewritten on that filesystem."""
+        import os
+        import shutil
+        mine = str(tmp_path / "uri" / "chunks")
+        shutil.copytree(store, mine)
+        ids = [r.chunk_id for r in spark.read.parquet(mine)
+               .select("chunk_id").limit(2).collect()]
+        n = spark.read.parquet(mine).count()
+        assert delete_chunks(spark, "file:" + mine, ids) == 2
+        left = spark.read.parquet(mine)
+        assert left.count() == n - 2
+        assert left.filter(left.chunk_id.isin(ids)).count() == 0
+        assert os.listdir(tmp_path / "uri") == ["chunks"]

@@ -476,3 +476,30 @@ class TestCacheHardening:
         assert len({f.rsplit("-w", 1)[1] for f in files
                     if f.startswith("part-")}) == 1
         assert os.listdir(tmp_path) == ["t"]
+
+    def test_uri_path_swaps_on_its_own_filesystem(self, spark, tmp_path,
+                                                  monkeypatch):
+        """A scheme-qualified path is published through the Hadoop
+        filesystem of its scheme: the table lands at the URI's path,
+        a complete table is kept unless ``replace``, and nothing named
+        after the scheme appears in the working directory."""
+        import os
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        monkeypatch.chdir(tmp_path)
+        local = str(tmp_path / "wh" / "t")
+        uri = "file:" + local
+
+        def publish(n, replace):
+            with SC.publish_dir(uri + "/", replace=replace) as tmp:
+                assert tmp.startswith("file:" + str(tmp_path / "wh") + "/.t.")
+                spark.range(n).write.parquet(tmp)
+
+        publish(3, replace=False)
+        assert spark.read.parquet(uri).count() == 3
+        publish(5, replace=False)  # complete table already there: kept
+        assert spark.read.parquet(local).count() == 3
+        publish(7, replace=True)
+        assert spark.read.parquet(local).count() == 7
+        assert sorted(os.listdir(tmp_path / "wh")) == ["t"]
+        assert sorted(os.listdir(tmp_path)) == ["wh"]

@@ -682,12 +682,12 @@ class TestDecisionTable:
         # falls back to the compute path instead of reading partial data
         import os
 
-        from ragflow_core16_spark.operators.webclean import (
-            _web_decisions_scan, web_decisions_path)
+        from ragflow_core16_spark.pipeline.snapshot_cache import (
+            read_table, table_path)
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
-        path = web_decisions_path(SF)
+        path = table_path("web_decisions", SF)
         os.makedirs(path, exist_ok=True)  # dir exists, no _SUCCESS
-        assert _web_decisions_scan(spark, SF) is None
+        assert read_table(spark, "web_decisions", SF) is None
 
     def test_fingerprint_tracks_input_bytes(self, tmp_path, monkeypatch):
         # a regenerated documents file under the SAME sf_dir must map to
@@ -695,15 +695,14 @@ class TestDecisionTable:
         import os
         import shutil
 
-        from ragflow_core16_spark.operators.webclean import (
-            web_decisions_path)
+        from ragflow_core16_spark.pipeline.snapshot_cache import table_path
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         sf2 = tmp_path / "sf"
         sf2.mkdir()
         shutil.copy(f"{SF}/documents.parquet", sf2 / "documents.parquet")
-        p1 = web_decisions_path(str(sf2))
+        p1 = table_path("web_decisions", str(sf2))
         os.utime(sf2 / "documents.parquet", ns=(1, 1))
-        assert web_decisions_path(str(sf2)) != p1
+        assert table_path("web_decisions", str(sf2)) != p1
 
     def test_materialize_is_idempotent(self, spark, tmp_path, monkeypatch):
         import os
