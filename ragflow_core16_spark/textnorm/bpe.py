@@ -17,8 +17,10 @@ match tiktoken byte-for-byte; without it the documented approximation
 stays in force.
 
 The merge loop mirrors tiktoken's ``byte_pair_merge``: repeatedly merge
-the adjacent pair with the lowest rank until no merge applies.  Pinned by
-tests on a toy vocabulary (``tests/test_textnorm.py::TestBpe``).
+the adjacent pair with the lowest rank (the leftmost on a tie) until no
+merge applies, re-ranking only the pairs beside each merge.  Pinned by
+tests on a toy vocabulary (``tests/test_textnorm.py::TestBpe``) and
+against the rescan-every-pair loop (``TestBpeMergeDifferential``).
 """
 
 from __future__ import annotations
@@ -43,6 +45,10 @@ _PRETOK = re.compile(
 )
 
 
+_BYTE = tuple(bytes((b,)) for b in range(256))
+_NO_RANK = float("inf")
+
+
 def load_vocab(path: str) -> dict[bytes, int]:
     """Parse the standard ``.tiktoken`` dump: ``base64(bytes) rank``."""
     ranks: dict[bytes, int] = {}
@@ -59,10 +65,16 @@ def load_vocab(path: str) -> dict[bytes, int]:
 class BpeEncoder:
     def __init__(self, ranks: dict[bytes, int]):
         self.ranks = ranks
-        # piece -> token count memo: corpus text is Zipf-distributed, so
-        # the hot path of count() is a dict hit per pre-tokenizer piece
-        # (bounded — reset rather than evict when full, which keeps the
-        # common pieces that immediately repopulate it)
+        # rank of every two-byte pair, [first byte][second byte]: a
+        # piece's initial pair ranks without a bytes object per pair
+        get = ranks.get
+        self._pair_rank = [[get(bytes((a, b)), _NO_RANK) for b in range(256)]
+                           for a in range(256)]
+        # piece -> token count memo, reset rather than evicted when full
+        # (the common pieces repopulate it at once).  It absorbs repeated
+        # pieces, but on long-tail web text ~170 pieces per page are new
+        # to a warm worker, and those misses (encode_piece) are most of
+        # count()'s time.
         self._cache: dict[str, int] = {}
 
     def count(self, text: str) -> int:
@@ -82,21 +94,31 @@ class BpeEncoder:
         return n
 
     def encode_piece(self, piece: bytes) -> list[bytes]:
-        """Token byte-sequences for one pre-tokenized piece (for tests)."""
+        """Token byte-sequences for one pre-tokenized piece.
+
+        tiktoken's ``byte_pair_merge``: the rank of every adjacent pair is
+        looked up once; a merge then re-ranks only the two pairs beside
+        it, and the leftmost lowest rank is found with ``min``/``index``.
+        Same tokens as rescanning every pair after each merge."""
         ranks = self.ranks
         if piece in ranks:
             return [piece]
-        parts = [piece[i:i + 1] for i in range(len(piece))]
-        while len(parts) > 1:
-            best_rank = None
-            best_i = -1
-            for i in range(len(parts) - 1):
-                r = ranks.get(parts[i] + parts[i + 1])
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_rank, best_i = r, i
-            if best_rank is None:
+        get = ranks.get
+        pair_rank = self._pair_rank
+        pair_ranks = [pair_rank[a][b] for a, b in zip(piece, piece[1:])]
+        parts = list(map(_BYTE.__getitem__, piece))
+        while pair_ranks:
+            r = min(pair_ranks)
+            if r == _NO_RANK:
                 break
-            parts[best_i:best_i + 2] = [parts[best_i] + parts[best_i + 1]]
+            i = pair_ranks.index(r)
+            merged = parts[i] + parts.pop(i + 1)
+            parts[i] = merged
+            del pair_ranks[i]
+            if i:
+                pair_ranks[i - 1] = get(parts[i - 1] + merged, _NO_RANK)
+            if i < len(pair_ranks):
+                pair_ranks[i] = get(merged + parts[i + 1], _NO_RANK)
         return parts
 
 

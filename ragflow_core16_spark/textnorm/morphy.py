@@ -27,13 +27,13 @@ wordlist (one lemma per line) for deployment parity.
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
 # WordNet noun detachment rules (MORPHOLOGICAL_SUBSTITUTIONS[NOUN])
 _NOUN_RULES = [
     ("s", ""), ("ses", "s"), ("ves", "f"), ("xes", "x"), ("zes", "z"),
     ("ches", "ch"), ("shes", "sh"), ("men", "man"), ("ies", "y"),
 ]
+_NOUN_SUFFIXES = tuple(old for old, _new in _NOUN_RULES)
 
 # irregular plurals (noun.exc-style; public list)
 _NOUN_EXC = {
@@ -686,9 +686,11 @@ def morphy(form: str) -> list[str]:
     return []
 
 
-@lru_cache(maxsize=1 << 16)
 def lemmatize(word: str) -> str:
     """``WordNetLemmatizer().lemmatize(word)`` with the default noun pos:
     shortest validated candidate, or the word unchanged."""
+    if word not in _NOUN_EXC and not word.endswith(_NOUN_SUFFIXES):
+        # no rule applies, so the only candidate is the word itself
+        return word
     lemmas = morphy(word)
     return min(lemmas, key=len) if lemmas else word

@@ -6,58 +6,71 @@ NLTK is not available here, so this is the classic 5-step algorithm.  Note
 NLTK's default mode adds some extensions to the 1980 paper (e.g. special
 handling of words ending in 'y' after step 1c); this implements the original
 published algorithm, which matches NLTK ORIGINAL_ALGORITHM mode.
+
+Consonant/vowel classes come from one left-to-right pass per string
+(``_sig``): a character other than a, e, i, o, u is a consonant, except
+a ``y`` that follows a consonant.  A character's class depends only on
+the characters before it, so the signature of a prefix is the prefix of
+the signature, and the measure m of the form [C](VC)^m[V] is the number of
+"vc" pairs in it.
+
+``stem`` keeps no memo of its own: its one hot caller,
+``RagTokenizer._en_norm``, memoizes ``stem(lemmatize(t))``.  What
+stemming costs is that memo's misses, words a worker has not seen yet,
+~150 per page on long-tail web text.
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
+# one byte per character: b"v" for a, e, i, o, u, b"c" for anything else
+# (a character outside ASCII encodes as one b"?" first)
+_C, _V = b"cv"
+_CV = bytes(_V if chr(b) in "aeiou" else _C for b in range(256))
 
-_VOWELS = set("aeiou")
-
-
-def _is_cons(word: str, i: int) -> bool:
-    c = word[i]
-    if c in _VOWELS:
-        return False
-    if c == "y":
-        return i == 0 or not _is_cons(word, i - 1)
-    return True
-
-
-def _measure(stem: str) -> int:
-    """m = number of VC sequences."""
-    m = 0
-    prev_vowel = False
-    for i in range(len(stem)):
-        cons = _is_cons(stem, i)
-        if prev_vowel and cons:
-            m += 1
-        prev_vowel = not cons
-    return m
-
-
-def _has_vowel(stem: str) -> bool:
-    return any(not _is_cons(stem, i) for i in range(len(stem)))
+_STEP2 = (
+    ("ational", "ate"), ("tional", "tion"), ("enci", "ence"),
+    ("anci", "ance"), ("izer", "ize"), ("abli", "able"), ("alli", "al"),
+    ("entli", "ent"), ("eli", "e"), ("ousli", "ous"), ("ization", "ize"),
+    ("ation", "ate"), ("ator", "ate"), ("alism", "al"), ("iveness", "ive"),
+    ("fulness", "ful"), ("ousness", "ous"), ("aliti", "al"),
+    ("iviti", "ive"), ("biliti", "ble"),
+)
+_STEP3 = (
+    ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
+    ("ical", "ic"), ("ful", ""), ("ness", ""),
+)
+# longest first; sorted() is stable, so equal lengths keep this order
+_STEP4 = tuple(sorted(
+    ("al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
+     "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous", "ive", "ize"),
+    key=len, reverse=True))
+_STEP2_SUFFIXES = tuple(s for s, _ in _STEP2)
+_STEP3_SUFFIXES = tuple(s for s, _ in _STEP3)
 
 
-def _ends_double_cons(word: str) -> bool:
-    return (len(word) >= 2 and word[-1] == word[-2]
-            and _is_cons(word, len(word) - 1))
+def _sig(s: str) -> bytes | bytearray:
+    """b"c"/b"v" per character of ``s``."""
+    sig = s.encode("ascii", "replace").translate(_CV)
+    i = s.find("y", 1)
+    if i < 0:
+        return sig
+    out = bytearray(sig)
+    while i > 0:
+        if out[i - 1] == _C:            # "y" after a consonant is a vowel
+            out[i] = _V
+        i = s.find("y", i + 1)
+    return out
 
 
-def _cvc(word: str) -> bool:
-    if len(word) < 3:
-        return False
-    return (_is_cons(word, len(word) - 3)
-            and not _is_cons(word, len(word) - 2)
-            and _is_cons(word, len(word) - 1)
-            and word[-1] not in "wxy")
+def _measure(s: str) -> int:
+    return _sig(s).count(b"vc")
 
 
-@lru_cache(maxsize=1 << 16)
+def _cvc(w: str, sig: bytes | bytearray) -> bool:
+    return sig[-3:] == b"cvc" and w[-1] not in "wxy"
+
+
 def stem(word: str) -> str:
-    """Zipfian vocabulary → the cache absorbs nearly all calls in the
-    extraction hot loop."""
     if len(word) <= 2:
         return word
     w = word
@@ -78,74 +91,67 @@ def stem(word: str) -> str:
         if _measure(w[:-3]) > 0:
             w = w[:-1]
     elif w.endswith("ed"):
-        if _has_vowel(w[:-2]):
+        if b"v" in _sig(w[:-2]):
             w = w[:-2]
             flag_1b = True
     elif w.endswith("ing"):
-        if _has_vowel(w[:-3]):
+        if b"v" in _sig(w[:-3]):
             w = w[:-3]
             flag_1b = True
     if flag_1b:
         if w.endswith(("at", "bl", "iz")):
             w += "e"
-        elif _ends_double_cons(w) and not w.endswith(("l", "s", "z")):
-            w = w[:-1]
-        elif _measure(w) == 1 and _cvc(w):
-            w += "e"
+        else:
+            sig = _sig(w)
+            if (len(w) >= 2 and w[-1] == w[-2] and sig[-1] == _C
+                    and not w.endswith(("l", "s", "z"))):
+                w = w[:-1]
+            elif sig.count(b"vc") == 1 and _cvc(w, sig):
+                w += "e"
 
     # Step 1c
-    if w.endswith("y") and _has_vowel(w[:-1]):
+    if w.endswith("y") and b"v" in _sig(w[:-1]):
         w = w[:-1] + "i"
 
     # Step 2
-    step2 = [
-        ("ational", "ate"), ("tional", "tion"), ("enci", "ence"),
-        ("anci", "ance"), ("izer", "ize"), ("abli", "able"), ("alli", "al"),
-        ("entli", "ent"), ("eli", "e"), ("ousli", "ous"), ("ization", "ize"),
-        ("ation", "ate"), ("ator", "ate"), ("alism", "al"), ("iveness", "ive"),
-        ("fulness", "ful"), ("ousness", "ous"), ("aliti", "al"),
-        ("iviti", "ive"), ("biliti", "ble"),
-    ]
-    for suf, rep in step2:
-        if w.endswith(suf):
-            stem_ = w[: -len(suf)]
-            if _measure(stem_) > 0:
-                w = stem_ + rep
-            break
+    if w.endswith(_STEP2_SUFFIXES):
+        for suf, rep in _STEP2:
+            if w.endswith(suf):
+                stem_ = w[: -len(suf)]
+                if _measure(stem_) > 0:
+                    w = stem_ + rep
+                break
 
     # Step 3
-    step3 = [
-        ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
-        ("ical", "ic"), ("ful", ""), ("ness", ""),
-    ]
-    for suf, rep in step3:
-        if w.endswith(suf):
-            stem_ = w[: -len(suf)]
-            if _measure(stem_) > 0:
-                w = stem_ + rep
-            break
+    if w.endswith(_STEP3_SUFFIXES):
+        for suf, rep in _STEP3:
+            if w.endswith(suf):
+                stem_ = w[: -len(suf)]
+                if _measure(stem_) > 0:
+                    w = stem_ + rep
+                break
 
     # Step 4
-    step4 = ["al", "ance", "ence", "er", "ic", "able", "ible", "ant",
-             "ement", "ment", "ent", "ion", "ou", "ism", "ate", "iti",
-             "ous", "ive", "ize"]
-    for suf in sorted(step4, key=len, reverse=True):
-        if w.endswith(suf):
-            stem_ = w[: -len(suf)]
-            if suf == "ion" and not stem_.endswith(("s", "t")):
-                continue
-            if _measure(stem_) > 1:
-                w = stem_
-            break
+    if w.endswith(_STEP4):
+        for suf in _STEP4:
+            if w.endswith(suf):
+                stem_ = w[: -len(suf)]
+                if suf == "ion" and not stem_.endswith(("s", "t")):
+                    continue
+                if _measure(stem_) > 1:
+                    w = stem_
+                break
 
     # Step 5a
     if w.endswith("e"):
         stem_ = w[:-1]
-        m = _measure(stem_)
-        if m > 1 or (m == 1 and not _cvc(stem_)):
+        sig = _sig(stem_)
+        m = sig.count(b"vc")
+        if m > 1 or (m == 1 and not _cvc(stem_, sig)):
             w = stem_
-    # Step 5b
-    if _measure(w) > 1 and _ends_double_cons(w) and w.endswith("l"):
+    # Step 5b ("l" is always a consonant, so the double-consonant test
+    # is the "ll" ending)
+    if w.endswith("ll") and _measure(w) > 1:
         w = w[:-1]
 
     return w

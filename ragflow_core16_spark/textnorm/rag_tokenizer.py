@@ -337,14 +337,19 @@ class RagTokenizer:
 
     @classmethod
     def _en_norm(cls, t: str) -> str:
-        """stem(lemmatize(t)) with a bounded memo — web text repeats tokens
-        heavily, and both functions are pure."""
+        """stem(lemmatize(t)) with a bounded memo (both functions are pure).
+        On long-tail web text the misses, words this worker has not seen
+        yet, cost more than the hits: ~150 per page on the benchmark's
+        ``job_longtail`` pages, ~0.5 ms of a ~5.5 ms page on one core of a
+        4-vCPU VM.  Like every memo here it is reset when full, so words
+        first seen late still get cached."""
         c = cls._EN_NORM_CACHE
         v = c.get(t)
         if v is None:
             v = stem(lemmatize(t))
-            if len(c) < 200_000:
-                c[t] = v
+            if len(c) >= 200_000:
+                c.clear()
+            c[t] = v
         return v
 
     def english_normalize_(self, tks):
@@ -503,8 +508,9 @@ class RagTokenizer:
         hit = c.get(L)
         if hit is None:
             hit = tuple(self._zh_span_pieces(L))
-            if len(c) < 100_000:
-                c[L] = hit
+            if len(c) >= 100_000:
+                c.clear()
+            c[L] = hit
         return hit
 
     def _zh_span_pieces(self, L: str) -> list:
@@ -607,8 +613,9 @@ class RagTokenizer:
                             stk = " ".join(stk)
                     else:
                         stk = " ".join(stk)
-        if len(c) < 200_000:
-            c[tk] = stk
+        if len(c) >= 200_000:
+            c.clear()
+        c[tk] = stk
         return stk
 
 

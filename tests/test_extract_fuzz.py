@@ -132,6 +132,16 @@ class TestHostileStructure:
         # and chunker all see a single giant piece
         _row(b"<p>" + b"a" * (2 * 1024 * 1024) + b"</p>")
 
+    def test_long_y_run_page_extracts(self):
+        # a 1,500-char "y" run reaches the Porter stemmer as one English
+        # token; it must stem like any word, not fail the whole page
+        run = "y" * 1500
+        r = _row(b"<html><body><p>The " + run.encode()
+                 + b" said hello to everyone here.</p></body></html>")
+        assert r["status"] == "ok", r["error"]
+        assert run in r["extracted_text"]
+        assert run[:-1] + "i" in r["chunks"][0]["content_ltks"]
+
     def test_attribute_bombs(self):
         _row(b"<p " + b"a='x' " * 20000 + b">t</p>")
         _row(b"<p class='" + b"y " * 50000 + b"'>t</p>")

@@ -178,6 +178,97 @@ class TestBpe:
         assert toks("a\n\nb") == ["a", "\n\n", "b"]
 
 
+def _textbook_encode(ranks, piece: bytes) -> list[bytes]:
+    """Reference merge loop: after every merge, rescan every adjacent
+    pair and merge the leftmost one of lowest rank (O(n^2) per piece)."""
+    if piece in ranks:
+        return [piece]
+    parts = [piece[i:i + 1] for i in range(len(piece))]
+    while len(parts) > 1:
+        best_rank = None
+        best_i = -1
+        for i in range(len(parts) - 1):
+            r = ranks.get(parts[i] + parts[i + 1])
+            if r is not None and (best_rank is None or r < best_rank):
+                best_rank, best_i = r, i
+        if best_rank is None:
+            break
+        parts[best_i:best_i + 2] = [parts[best_i] + parts[best_i + 1]]
+    return parts
+
+
+class TestBpeMergeDifferential:
+    """``BpeEncoder.encode_piece`` (neighbour re-ranking) against the
+    textbook loop above, piece by piece."""
+
+    @staticmethod
+    def _assert_same(ranks, pieces):
+        from ragflow_core16_spark.textnorm.bpe import BpeEncoder
+        enc = BpeEncoder(ranks)
+        n = 0
+        for p in pieces:
+            assert enc.encode_piece(p) == _textbook_encode(ranks, p), p
+            n += 1
+        return n
+
+    def test_shipped_vocab(self):
+        import random
+        from ragflow_core16_spark.textnorm.bpe import _PRETOK, default_encoder
+        rng = random.Random(11)
+        letters = "etaoinshrdlucmfwypvbgkjqxz"
+        weights = [26 - i for i in range(26)]
+        words = ["".join(rng.choices(letters, weights, k=rng.randint(1, 14)))
+                 for _ in range(6000)]
+        text = " ".join(w.capitalize() if i % 9 == 0 else w
+                        for i, w in enumerate(words))
+        text += " 2024-01-15 12,345 it's we'LL ___ --> \n\n\t x\r\n"
+        pieces = {p.encode() for p in _PRETOK.findall(text)}
+        # long pieces: many merges each, and a run of one byte
+        pieces |= {(" " + "the" * 40).encode(), ("ab" * 200).encode(),
+                   b"a" * 300, bytes(range(256))}
+        assert self._assert_same(default_encoder().ranks,
+                                 sorted(pieces)) > 3000
+
+    def test_rank_ties_and_absent_pairs(self):
+        import itertools
+        # equal ranks for different pairs (the leftmost must win), a
+        # token reachable only through a tie, bytes with no rank at all
+        # ("x"), a whole-piece token no merge sequence reaches ("dcba")
+        ranks = {b"a": 0, b"b": 1, b"c": 2, b"d": 3,
+                 b"ab": 10, b"bc": 10, b"cd": 10, b"da": 11,
+                 b"abc": 12, b"bcd": 12, b"abcd": 13, b"cda": 13,
+                 b"aa": 9, b"aaa": 9, b"aaaa": 14, b"dcba": 1}
+        pieces = [bytes(t) for n in range(0, 8)
+                  for t in itertools.product(b"abcdx", repeat=n)]
+        assert self._assert_same(ranks, pieces) == sum(5 ** n
+                                                       for n in range(8))
+
+    def test_multibyte_cjk_pieces(self):
+        import random
+        from ragflow_core16_spark.textnorm.bpe import default_encoder
+        chars = "中文分词测试数据引擎的了是在和有"
+        # toy byte-level vocab over the UTF-8 bytes of these characters:
+        # every lead+continuation pair, whole characters, some two-char
+        # words, ranks interleaved so merges cross character boundaries
+        ranks = {bytes([b]): b for b in range(256)}
+        rank = 256
+        for i, ch in enumerate(chars):
+            b = ch.encode()
+            ranks.setdefault(b[:2], rank + (i % 3))
+            ranks.setdefault(b[1:], rank + 7)
+            ranks.setdefault(b, rank + 20 + i)
+            rank += 2
+        for w in ("中文", "分词", "测试", "数据", "引擎", "的了"):
+            ranks[w.encode()] = rank
+            rank += 1
+        ranks[("文分").encode()[2:4]] = 300     # a pair across two chars
+        rng = random.Random(5)
+        pieces = ["".join(rng.choices(chars + "a ，", k=rng.randint(1, 12)))
+                  .encode() for _ in range(3000)]
+        self._assert_same(ranks, pieces)
+        self._assert_same(default_encoder().ranks, pieces)
+
+
 class TestShippedVocab:
     """Invariants of the shipped ranks file that the oracle token
     arithmetic RELIES on (operators/sql_shared.py): class purity and the

@@ -1,6 +1,12 @@
 """Tokenizer tests: Porter stemmer (published pairs), lemmatizer,
 bidirectional max-match, fine-grained split, Q2B."""
 
+import hashlib
+import os
+
+import pytest
+
+from ragflow_core16_spark.textnorm import morphy as _morphy_mod
 from ragflow_core16_spark.textnorm.morphy import lemmatize, morphy
 from ragflow_core16_spark.textnorm.porter import stem
 from ragflow_core16_spark.textnorm.rag_tokenizer import (
@@ -26,12 +32,84 @@ class TestPorter:
     def test_short_words_untouched(self):
         assert stem("is") == "is" and stem("a") == "a"
 
+    def test_long_y_run_returns(self):
+        # a "y" after a consonant is a vowel, so a y run alternates
+        # consonant/vowel; a long run must not exhaust the recursion limit
+        assert [stem("y" * k) for k in range(1, 5)] == \
+            ["y", "yy", "yyi", "yyyi"]
+        assert stem("y" * 5000) == "y" * 4999 + "i"
+
     def test_lemmatize(self):
         assert lemmatize("dogs") == "dog"
         assert lemmatize("boxes") == "box"
         assert lemmatize("children") == "child"
         assert lemmatize("analysis") == "analysis"  # lemma validates as-is
         assert lemmatize("glass") == "glass"        # ditto
+
+
+def _stem_lemma_words() -> list[str]:
+    """Deterministic word set for the stem/lemmatize digests: syllable
+    words and pairs of them, the morphy lexicon and irregular plurals,
+    and every lexicon word with each Porter step 1-5 and noun-rule
+    suffix attached."""
+    onsets = ["", "b", "c", "d", "f", "g", "h", "j", "l", "m", "n", "p",
+              "qu", "r", "s", "t", "v", "w", "x", "y", "z", "bl", "br",
+              "ch", "cl", "cr", "dr", "fl", "gr", "pl", "pr", "sh", "sk",
+              "sl", "sp", "st", "str", "th", "tr", "wh"]
+    nuclei = ["a", "e", "i", "o", "u", "y", "ai", "ea", "ee", "ie", "oa",
+              "oo", "ou", "ay", "ey", "oy"]
+    codas = ["", "b", "ck", "d", "ff", "g", "l", "ll", "m", "n", "ng",
+             "nt", "p", "r", "rt", "s", "ss", "st", "t", "tt", "x", "y",
+             "z", "zz"]
+    syl = [o + n + c for o in onsets for n in nuclei for c in codas]
+    words = list(syl)
+    n = len(syl)
+    for i, a in enumerate(syl):
+        for k in (1, 2):
+            words.append(a + syl[(i * 7 + k * 3079) % n])
+    suffixes = sorted({
+        "sses", "ies", "ss", "s", "eed", "ed", "ing", "at", "bl", "iz", "y",
+        "ational", "tional", "enci", "anci", "izer", "abli", "alli",
+        "entli", "eli", "ousli", "ization", "ation", "ator", "alism",
+        "iveness", "fulness", "ousness", "aliti", "iviti", "biliti",
+        "icate", "ative", "alize", "iciti", "ical", "ful", "ness",
+        "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
+        "ment", "ent", "ion", "sion", "tion", "ou", "ism", "ate", "iti",
+        "ous", "ive", "ize", "e", "ll",
+        "ses", "ves", "xes", "zes", "ches", "shes", "men"})
+    lexicon = sorted(_morphy_mod._LEXICON | set(_morphy_mod._NOUN_EXC))
+    words += lexicon
+    for base in lexicon:
+        words += [base + s for s in suffixes]
+    words += ["y" * k for k in range(1, 41)]
+    words += ["ay" * k for k in range(1, 21)]
+    return words
+
+
+@pytest.mark.skipif(bool(os.environ.get("RAG_WORDNET_NOUNS")),
+                    reason="digests are over the built-in noun lexicon")
+class TestStemLemmaDigest:
+    """``stem`` and ``lemmatize`` over 307k generated words hash to the
+    digests recorded with the previous implementations (recursive
+    consonant test, per-call step tables; lemmatize through ``morphy``
+    for every word): the table-driven stemmer and the lemmatize
+    short-circuit change no output."""
+
+    N_WORDS = 307_236
+    LEMMATIZE_SHA256 = ("f61e7676f20674e74631c049aea9ebd3"
+                        "5618f38d55157243d1c1b94087b78edc")
+    STEM_SHA256 = ("33ae646f92dbbad76ff1f4d4215862d0"
+                   "2b35d0fe4340ed612b79cbda8f0fce76")
+
+    @staticmethod
+    def _digest(out) -> str:
+        return hashlib.sha256("\n".join(out).encode()).hexdigest()
+
+    def test_digests(self):
+        words = _stem_lemma_words()
+        assert len(words) == self.N_WORDS
+        assert self._digest(map(lemmatize, words)) == self.LEMMATIZE_SHA256
+        assert self._digest(map(stem, words)) == self.STEM_SHA256
 
 
 class TestMorphy:
@@ -107,6 +185,29 @@ class TestTokenize:
         # chars not in the demo dict degrade to per-char tokens
         out = tokenize("魑魅魍魉")
         assert out.split() == ["魑", "魅", "魍", "魉"]
+
+
+class TestMemoPolicy:
+    """Every per-worker tokenizer memo is reset when full, so a word a
+    long-lived worker first sees late is still cached (a memo that stops
+    inserting when full recomputes it on every occurrence)."""
+
+    @pytest.mark.parametrize("attr,size,call,key", [
+        ("_EN_NORM_CACHE", 200_000, lambda tk: tk._en_norm("walking"),
+         "walking"),
+        ("_ZH_SPAN_CACHE", 100_000, lambda tk: tk._zh_span("数据处理引擎"),
+         "数据处理引擎"),
+        ("_FG_CACHE", 200_000, lambda tk: tk._fg_token("数据处理"),
+         "数据处理"),
+    ], ids=["en_norm", "zh_span", "fg_token"])
+    def test_full_memo_resets(self, monkeypatch, attr, size, call, key):
+        from ragflow_core16_spark.textnorm.rag_tokenizer import (
+            RagTokenizer, get_tokenizer)
+        full = {f"w{i}": None for i in range(size)}
+        monkeypatch.setattr(RagTokenizer, attr, full)
+        tk = get_tokenizer()
+        call(tk)
+        assert list(full) == [key]
 
 
 class TestFineGrained:
